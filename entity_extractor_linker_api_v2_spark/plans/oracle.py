@@ -922,8 +922,9 @@ a2 AS (SELECT vec_id, cluster FROM (
        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) = 1)
 SELECT vec_id, cluster FROM a2"""
 
-# Connected components via transitive closure (recursive CTE); mirrors the
-# Spark iterative min-propagation loop in operators.canonicalize.
+# Connected components via transitive closure (recursive CTE): an
+# independent computation of the (node, comp = min member) partition that
+# operators.canonicalize solves.
 _CC_FINAL = """
 SELECT n AS node, min(m) AS comp, sha256(min(m)) AS canonical_id
 FROM reach GROUP BY n"""

@@ -377,7 +377,7 @@ def _dedup_corpus(spark, sf_dir):
             .selectExpr("doc_id + 200000 AS doc_id",
                         "concat(text, ' zusatz anhang') AS text"))
     out = d.unionByName(exact).unionByName(near)
-    if tables.small_input(sf_dir, "documents"):
+    if tables.needs_scan_floor(spark, sf_dir, "documents"):
         out = out.repartition(spark.sparkContext.defaultParallelism)
     return out
 

@@ -38,27 +38,42 @@ def small_input(sf_dir: str, name: str) -> bool:
     return size < 256 * 1024 * 1024
 
 
+def needs_scan_floor(spark: SparkSession, sf_dir: str, name: str) -> bool:
+    """True when a plain scan of the table's parquet file would run on
+    fewer tasks than Spark's default parallelism: the file is tiny
+    (``small_input``), or it has fewer row groups than that.  Spark splits
+    a parquet scan only at row-group boundaries, so the second kind is
+    read by that few tasks however large it is (pyarrow writes one row
+    group per 1Mi rows by default: a 100k-page corpus above the
+    ``small_input`` size took 44 s per warm pass as one row group against
+    25 s with 8,192-row groups, on a 4-core host).  Reads only the footer;
+    False when it cannot be read (non-local path, directory)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    if small_input(sf_dir, name):
+        return True
+    try:
+        groups = pq.read_metadata(f"{sf_dir}/{name}.parquet").num_row_groups
+    except (OSError, pa.ArrowInvalid):
+        return False
+    return groups < spark.sparkContext.defaultParallelism
+
+
 def scan_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """``load`` with a scan-parallelism floor for compute-heavy consumers.
 
-    A parquet input smaller than one scan split (maxPartitionBytes, and a
-    single row group regardless) yields ONE task, serializing every
-    downstream per-row expression onto one core of the session — the
-    guide's 'input skew: repartition immediately after the read' case
-    (measured: the minhash/simhash chains ran 2x faster at sf0.1 once
-    spread).  The round-robin repartition is gated on the FILE BYTES (a
-    free os.stat, no extra query planning): it only fires when the whole
-    input could not possibly fill one split per core, so at any real scale
-    (file count x split size >> cores) this is load() verbatim — never a
-    shuffle of a large corpus.  Non-local paths skip the stat and return
-    the plain scan."""
+    A parquet input smaller than one scan split (maxPartitionBytes), or
+    written as fewer row groups than cores, yields fewer tasks than cores,
+    serializing every downstream per-row expression onto a few cores —
+    input skew, fixed by repartitioning right after the read (measured:
+    the minhash/simhash chains ran 2x faster at sf0.1 once spread).  The
+    round-robin repartition is gated on the file bytes and its footer
+    (``needs_scan_floor``: an os.stat and a footer read, no extra query
+    planning), so an input that already splits into a task per core is
+    load() verbatim — never a shuffle for a marginal parallelism gain.
+    Paths that cannot be read locally return the plain scan."""
     df = load(spark, sf_dir, name)
-    # fire only in the unambiguous tiny-input regime (small_input): the
-    # whole file fits in a couple of scan splits, so the shuffle moves a
-    # bounded few hundred MB at most.  Larger inputs already split
-    # naturally; repartitioning them would shuffle real data for a marginal
-    # parallelism gain.
-    if small_input(sf_dir, name):
+    if needs_scan_floor(spark, sf_dir, name):
         return df.repartition(spark.sparkContext.defaultParallelism)
     return df
 

@@ -298,26 +298,105 @@ def test_ivf_topk_with_prebuilt_index_matches_inline(spark):
     assert inline == reused and len(inline) == 10
 
 
-def test_star_cc_equals_min_propagation(spark):
-    """small-star/large-star components must produce the identical
-    (node, comp=min member) partition as min-label propagation on chains
-    (worst case for propagation), hubs, forests, and random graphs."""
-    import random
+# labels whose component minimum depends on the comparison used: code-point
+# (= Spark's binary UTF-8) order puts "B" < "Zürich" < "zurich", "z" < "Ä"
+# < "ß", and U+FF5A "ｚ" < U+1D518 "𝔘" (in UTF-16 order "𝔘" comes first)
+ORDER_EDGES = [("Zürich", "zurich"), ("zurich", "B"),
+               ("ß", "Ä"), ("Ä", "z"), ("𝔘", "ｚ")]
 
-    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
-        connected_components, connected_components_star)
+
+def _cc_test_edges():
+    """Chains (worst case for label propagation), hubs, a random forest
+    and the comparison-sensitive labels."""
+    import random
 
     rng = random.Random(42)
     chain = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(60)]
     hub = [("hub", f"h{i:03d}") for i in range(80)]
     rand = [(f"r{rng.randrange(120):03d}", f"r{rng.randrange(120):03d}")
             for _ in range(150)]
-    edges = [(a, b) for a, b in chain + hub + rand if a != b]
-    df = spark.createDataFrame(edges, "a string, b string")
+    return [(a, b) for a, b in chain + hub + rand + ORDER_EDGES if a != b]
 
-    prop = {(r["node"], r["comp"]) for r in connected_components(df).collect()}
+
+def test_one_task_cc_equals_star(spark):
+    """The one-task union-find must produce the identical (node, comp=min
+    member) partition as small-star/large-star on chains, hubs, random
+    graphs and labels whose order depends on the comparison."""
+    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
+        connected_components, connected_components_star)
+
+    df = spark.createDataFrame(_cc_test_edges(), "a string, b string")
+    local = {(r["node"], r["comp"]) for r in connected_components(df).collect()}
     star = {(r["node"], r["comp"]) for r in connected_components_star(df).collect()}
-    assert prop == star and len(star) > 0
+    assert local == star and len(star) > 0
+    comp = dict(local)
+    assert comp["zurich"] == comp["Zürich"] == "B"
+    assert comp["ß"] == comp["Ä"] == "z"
+    assert comp["𝔘"] == "ｚ"
+
+
+def test_one_task_cc_edge_cases(spark):
+    """Null endpoints and self-loops are dropped (as the star rounds drop
+    them); an empty edge relation gives an empty frame; an input split
+    into many Arrow batches solves as one graph."""
+    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
+        canonical_entities, connected_components, connected_components_star)
+
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", None), (None, "c"), ("d", "d"), ("e", "f")],
+        "a string, b string")
+    got = {tuple(r) for r in connected_components(df).collect()}
+    assert got == {("a", "a"), ("b", "a"), ("e", "e"), ("f", "e")}
+    assert got == {tuple(r) for r in connected_components_star(df).collect()}
+
+    none = spark.createDataFrame([("Berlin", "Berlin", "")],
+                                 "label string, label_de string, wikidata_id string")
+    empty = canonical_entities(none)
+    assert empty.columns == ["node", "comp", "canonical_id"]
+    assert empty.collect() == []
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    edges = spark.createDataFrame(_cc_test_edges(), "a string, b string")
+    want = {tuple(r) for r in connected_components_star(edges).collect()}
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        got = {tuple(r) for r in connected_components(edges).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+
+
+def test_star_cc_raises_without_fixpoint(spark):
+    """Star rounds cut off before the fixpoint would read a non-star edge
+    relation as (member, root); they must raise instead."""
+    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
+        connected_components_star)
+
+    chain = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(60)]
+    df = spark.createDataFrame(chain, "a string, b string")
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components_star(df, max_iter=1)
+
+
+def test_canonical_entities_job_budget(spark):
+    """Canonicalizing the fixture entities takes at most 5 Spark jobs,
+    counting the collect that consumes the output (the star rounds took
+    26): per-round jobs must not creep back in."""
+    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
+        canonical_entities)
+    from entity_extractor_linker_api_v2_spark.plans.pipeline import run_pipeline
+
+    ents = run_pipeline(spark, SF_SMALL)["entities"].localCheckpoint()
+    sc = spark.sparkContext
+    group = "canonical-entities-job-budget"
+    sc.setJobGroup(group, "canonical_entities job budget")
+    try:
+        rows = canonical_entities(ents).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert rows and len(jobs) <= 5, jobs
 
 
 def test_ivf_recall_monotonic_in_nprobe(spark):

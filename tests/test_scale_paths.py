@@ -91,3 +91,31 @@ def test_windowed_external_table_queries_are_reinvocable(spark):
         first = _rows(QUERIES[key](spark, SF_SMALL))
         second = _rows(QUERIES[key](spark, SF_SMALL))
         assert first == second and len(first) > 0, key
+
+
+def test_scan_floor_spreads_one_row_group_file(spark, tmp_path, monkeypatch):
+    """A parquet file above the small-input size but written as one row
+    group scans as ONE task whatever its size; scan_parallel must spread
+    it to core count.  A file with a row group per core already splits,
+    so it stays a plain scan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from entity_extractor_linker_api_v2_spark.sources import tables
+
+    cores = spark.sparkContext.defaultParallelism
+    rows = pa.table({"doc_id": list(range(cores * 16))})
+    pq.write_table(rows, tmp_path / "one.parquet")
+    pq.write_table(rows, tmp_path / "many.parquet", row_group_size=16)
+    # stand in for a file above small_input's 256 MB without writing one
+    monkeypatch.setattr(tables, "small_input", lambda sf_dir, name: False)
+
+    def scan(name):
+        df = tables.scan_parallel(spark, str(tmp_path), name)
+        return df, df._jdf.queryExecution().executedPlan().toString()
+
+    one, plan = scan("one")
+    assert "RoundRobinPartitioning" in plan, plan
+    assert one.rdd.getNumPartitions() == cores and one.count() == cores * 16
+    _, plan = scan("many")
+    assert "RoundRobinPartitioning" not in plan, plan
